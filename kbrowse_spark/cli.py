@@ -9,6 +9,7 @@ println sink (`src/kbrowse/core.clj:164-175`).
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
@@ -21,25 +22,22 @@ def build_arg_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--bootstrap-servers")
     p.add_argument("--source-parquet", help="offline envelope parquet source")
-    p.add_argument("--topics", default="")
+    p.add_argument("--topics")
     p.add_argument("--partitions")
     p.add_argument("--default-partition", action="store_true")
     p.add_argument("--key-regex")
     p.add_argument("--value-regex")
-    p.add_argument("--key-deserializer", default="string",
-                   choices=["string", "msgpack", "avro"])
-    p.add_argument("--value-deserializer", default="string",
-                   choices=["string", "msgpack", "avro"])
+    p.add_argument("--key-deserializer", help="string (default) | msgpack | avro")
+    p.add_argument("--value-deserializer", help="string (default) | msgpack | avro")
     p.add_argument(
         "--num-partitions",
-        type=int,
         help="topic partition count for offline sources (default-partition math)",
     )
-    p.add_argument("--relative-offset", type=int)
+    p.add_argument("--relative-offset")
     p.add_argument("--start-timestamp")
     p.add_argument("--stop-timestamp")
     p.add_argument("--follow", action="store_true")
-    p.add_argument("--print-offset", type=int)
+    p.add_argument("--print-offset")
     p.add_argument("--pretty", action="store_true")
     p.add_argument(
         "--output-parquet",
@@ -47,7 +45,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--stop-after-seconds",
-        type=int,
         help="follow-mode wall-clock kill switch (default 86400)",
     )
     p.add_argument("--avro-key-schema", help="writer schema JSON for avro keys")
@@ -60,29 +57,28 @@ def build_arg_parser() -> argparse.ArgumentParser:
     return p
 
 
-def spec_from_args(args: argparse.Namespace) -> QuerySpec:
-    spec = QuerySpec(
-        bootstrap_servers=args.bootstrap_servers,
-        source_parquet=args.source_parquet,
-        topics=[t for t in (args.topics or "").split(",") if t],
-        partitions=[int(x) for x in args.partitions.split(",")]
-        if args.partitions
-        else None,
-        default_partition=args.default_partition,
-        key_regex=args.key_regex,
-        value_regex=args.value_regex,
-        key_deserializer=args.key_deserializer,
-        value_deserializer=args.value_deserializer,
-        num_partitions=args.num_partitions,
-        relative_offset=args.relative_offset,
-        start_timestamp=args.start_timestamp,
-        stop_timestamp=args.stop_timestamp,
-        follow=args.follow,
-        print_offset=args.print_offset,
-        stop_after_seconds=args.stop_after_seconds,
-        avro_key_schema=args.avro_key_schema,
-        avro_value_schema=args.avro_value_schema,
-        schema_registry_url=args.schema_registry_url,
+# CLI-only flags: how to print, not what to search.
+_OUTPUT_FLAGS = ("pretty", "output_parquet")
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = build_arg_parser().parse_args(argv)
+    try:
+        return _run(args)
+    except QuerySpecError as e:  # Q8: bad args or a plan-time error
+        print(json.dumps({"error": str(e)}), file=sys.stderr)
+        return 2
+
+
+def _run(args: argparse.Namespace) -> int:
+    # One parser for HTTP and the CLI: the flags go through the same
+    # flat options map as /search query args.
+    spec = QuerySpec.from_options(
+        {
+            k: v
+            for k, v in vars(args).items()
+            if v is not None and v is not False and k not in _OUTPUT_FLAGS
+        }
     )
     for side, deser, schema in (
         ("key", spec.key_deserializer, spec.avro_key_schema),
@@ -95,18 +91,6 @@ def spec_from_args(args: argparse.Namespace) -> QuerySpec:
                 "matched/emitted",
                 file=sys.stderr,
             )
-    return spec.validate()
-
-
-def main(argv: list[str] | None = None) -> int:
-    import json as _json
-
-    args = build_arg_parser().parse_args(argv)
-    try:
-        spec = spec_from_args(args)
-    except QuerySpecError as e:
-        print(_json.dumps({"error": str(e)}), file=sys.stderr)
-        return 2
 
     from kbrowse_spark.session import get_spark
 

@@ -13,22 +13,31 @@ The Spark-native equivalent of kbrowse's `search` prologue + poll loop
   emitted for every n-th offset regardless of match)
 
 The output DataFrame is the *discriminated-union row stream*
-(type: offset|result) ordered by (topic, partition, offset) — the
+(type: offset|result).  ``build_scan`` orders it by EMIT_ORDER, the
 deterministic order SURVEY §7 mandates for stable output hashing.
+Follow mode (O2) runs the same pipeline, ``build_rows(stream=True)``:
+only the source differs (``readStream``, ``maxOffsetsPerTrigger`` instead of
+``endingOffsets``), and the stop bounds are dropped.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kbrowse_spark.functions.decoders import msgpack_str_udf, string_decode
 from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
-from kbrowse_spark.sources.fixture import envelope_from_parquet
-from kbrowse_spark.sources.kafka import (
-    kafka_batch_options,
-    resolve_partitions,
-)
+from kbrowse_spark.sources.fixture import ENVELOPE_SCHEMA, envelope_from_parquet
+from kbrowse_spark.sources.kafka import kafka_options, resolve_partitions
+
+# Emission order (SURVEY §7 hard-point 1): event-time first — preserves
+# per-partition offset order on monotonic producers AND reproduces the
+# reference's arrival-order interleave on its own integration fixtures
+# — then (topic, partition, offset) as total tie-break; 'offset'
+# (progress) rows sort before 'result' rows for the same record.
+EMIT_ORDER = ("timestamp", "topic", "partition", "offset", "type")
 
 
 def anchored(regex: str) -> str:
@@ -71,21 +80,33 @@ def _decode(
     raise QuerySpecError(f"unknown deserializer {deserializer!r}")
 
 
-def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
-    """Source DataFrame in Kafka-envelope shape, with partition pruning
-    already applied at the source."""
+def load_envelope(
+    spark: SparkSession, spec: QuerySpec, stream: bool = False
+) -> DataFrame:
+    """Source DataFrame in Kafka-envelope shape: partition pruning
+    applied at the source, then the scan window (Q4, Q9).
+
+    ``stream`` (follow mode) reads with ``readStream`` and drops the
+    offset stop bound: the reference's follow ignores the snapshot
+    bound but still honors the starting seek (search.clj:107,166,179).
+    """
     if spec.source_parquet:
-        df = envelope_from_parquet(spark, spec.source_parquet)
-        if spec.topics:
-            df = df.filter(F.col("topic").isin(spec.topics))
-        assignment = _fixture_assignment(df, spec)
+        snapshot, source = _fixture_reads(spark, spec.source_parquet, stream)
+        conds = [F.col("topic").isin(spec.topics)] if spec.topics else []
+        snapshot = _where(snapshot, conds)
+        assignment = _fixture_assignment(snapshot, spec)
         if assignment is not None:
-            pairs = [(t, p) for t, ps in assignment.items() for p in ps]
             cond = F.lit(False)
-            for t, p in pairs:
-                cond = cond | ((F.col("topic") == t) & (F.col("partition") == p))
-            df = df.filter(cond)
-        return df
+            for t, ps in assignment.items():
+                for p in ps:
+                    cond = cond | ((F.col("topic") == t) & (F.col("partition") == p))
+            conds.append(cond)
+            snapshot = snapshot.filter(cond)
+        window = _fixture_window_condition(snapshot, spec, bounded=not stream)
+        if window is not None:
+            conds.append(window)
+            snapshot = snapshot.filter(window)
+        return _where(source, conds) if stream else snapshot
     if spec.bootstrap_servers:
         counts = _broker_partition_counts(spec)
         assignment = resolve_partitions(
@@ -94,20 +115,49 @@ def load_envelope(spark: SparkSession, spec: QuerySpec) -> DataFrame:
             spec.partitions,
             spec.key_regex if spec.default_partition else None,
         )
-        opts = kafka_batch_options(
+        opts = kafka_options(
             spec.bootstrap_servers,
             assignment,
             starting_offsets="earliest"
             if spec.relative_offset is None
             else _broker_starting_offsets(spec, assignment),
-            ending_offsets="latest",
+            ending_offsets=None if stream else "latest",
+            max_offsets_per_trigger=spec.max_offsets_per_trigger if stream else None,
             min_partitions=spec.min_partitions,
         )
-        reader = spark.read.format("kafka")
+        reader = (spark.readStream if stream else spark.read).format("kafka")
         for k, v in opts.items():
             reader = reader.option(k, v)
         return reader.load()
     raise QuerySpecError("no source: set source_parquet or bootstrap_servers")
+
+
+def _fixture_reads(
+    spark: SparkSession, path: str, stream: bool
+) -> tuple[DataFrame, DataFrame]:
+    """(snapshot, source) for the fixture path: the plan-time batch view
+    that partition pruning and the scan window resolve against, and the
+    DataFrame the scan reads.  In batch mode they are the same."""
+    if not stream:
+        df = envelope_from_parquet(spark, path)
+        return df, df
+    if "*" not in path and not os.path.isdir(path):
+        # The file-stream source reads directories: stage a single file
+        # as one.  A directory of Spark-written tables needs a glob
+        # (dir/*.parquet) — the file source does not recurse.
+        from kbrowse_spark.operators.streaming_queries import _stage_stream_dir
+
+        path = _stage_stream_dir(path)
+    return (
+        spark.read.schema(ENVELOPE_SCHEMA).parquet(path),
+        spark.readStream.schema(ENVELOPE_SCHEMA).parquet(path),
+    )
+
+
+def _where(df: DataFrame, conds: list) -> DataFrame:
+    for cond in conds:
+        df = df.filter(cond)
+    return df
 
 
 def _fixture_assignment(df: DataFrame, spec: QuerySpec) -> dict | None:
@@ -179,14 +229,13 @@ def _broker_starting_offsets(spec: QuerySpec, assignment: dict) -> str:
 
 
 def _fixture_window_condition(
-    snapshot_df: DataFrame, spec: QuerySpec, bounded: bool = True
+    snapshot_df: DataFrame, spec: QuerySpec, bounded: bool
 ):
-    """Scan-window filter condition from a plan-time snapshot of
+    """Fixture-path scan-window condition from a plan-time snapshot of
     per-partition [earliest, latest): relative-offset with Q9 clamping,
-    bounded by the snapshot (Q4).  Shared by the batch planner and
-    follow mode (which passes bounded=False: the reference's follow
-    ignores the stop bound but still honors the starting seek —
-    search.clj:179,166).  Returns None when no window applies."""
+    bounded by the snapshot (Q4) unless ``bounded`` is False (follow).
+    On the Kafka path the same window compiles into source options.
+    Returns None when no window applies."""
     if spec.relative_offset is None:
         return None
     from kbrowse_spark.sources.kafka import clamp_offset
@@ -212,41 +261,21 @@ def _fixture_window_condition(
     return cond
 
 
-def _apply_offset_window(df: DataFrame, spec: QuerySpec) -> DataFrame:
-    """Fixture-path scan window (see _fixture_window_condition); on the
-    Kafka path this logic compiles into source options instead."""
-    cond = _fixture_window_condition(df, spec)
-    return df if cond is None else df.filter(cond)
-
-
-def build_scan(
-    spark: SparkSession, spec: QuerySpec, *, deterministic_order: bool = True
-) -> DataFrame:
-    """Full pipeline: envelope -> window -> decode -> regex filter ->
-    discriminated union (offset|result rows).
-
-    Output columns: type, topic, partition, offset, timestamp,
-    key_str, value_str.
-
-    ``deterministic_order=True`` (default — the oracle-hash / CLI
-    path) totally orders by (topic, partition, offset, type): the
-    reference's per-partition arrival (offset) order, made total.
-    ``False`` (service emission at scale) sorts within partitions
-    only — no cluster-wide exchange for a sort the wire protocol
-    doesn't require.
-    """
-    env = load_envelope(spark, spec)
-    env = _apply_offset_window(env, spec)
+def build_rows(spark: SparkSession, spec: QuerySpec, stream: bool) -> DataFrame:
+    """envelope -> window -> decode -> regex filter -> discriminated
+    union (offset|result rows), unordered.  ``stream`` builds follow
+    mode's unbounded stream: ``readStream``, without the stop bounds
+    (the snapshot offset and stop_timestamp); its sink orders each
+    micro-batch by EMIT_ORDER."""
+    env = load_envelope(spark, spec, stream)
     if spec.start_timestamp:
         # The reference validates --start-timestamp but never applies it
         # (SURVEY O9: consumed at cli.clj:65-66, unused in search.clj) —
-        # implemented for real here; on the Kafka path the same bound
-        # also compiles to startingOffsetsByTimestamp, with this filter
-        # as the exactness residual (offset-for-time is batch-granular).
+        # implemented for real here, as a filter on both source paths.
         env = env.filter(
             F.col("timestamp") >= F.lit(spec.start_timestamp).cast("timestamp")
         )
-    if spec.stop_timestamp:
+    if spec.stop_timestamp and not stream:
         env = env.filter(
             F.col("timestamp") <= F.lit(spec.stop_timestamp).cast("timestamp")
         )
@@ -281,19 +310,15 @@ def build_scan(
         progress = env.filter((F.col("offset") % spec.print_offset) == 0).select(
             F.lit("offset").alias("type"), *base_cols
         )
-        out = progress.unionByName(results)
-    else:
-        out = results
+        return progress.unionByName(results)
+    return results
 
-    # Emission order (SURVEY §7 hard-point 1).  Deterministic mode:
-    # event-time first — preserves per-partition offset order on
-    # monotonic producers AND reproduces the reference's arrival-order
-    # interleave on its own integration fixtures — then (topic,
-    # partition, offset) as total tie-break; 'offset' (progress) rows
-    # sort before 'result' rows for the same record.  Scale mode
-    # sorts within partitions only: per-Kafka-partition offset order
-    # (exactly the reference's guarantee) without a cluster-wide
-    # exchange.
-    if deterministic_order:
-        return out.orderBy("timestamp", "topic", "partition", "offset", "type")
-    return out.sortWithinPartitions("topic", "partition", "offset", "type")
+
+def build_scan(spark: SparkSession, spec: QuerySpec) -> DataFrame:
+    """The bounded scan: the row stream totally ordered by EMIT_ORDER.
+
+    Output columns: type, topic, partition, offset, timestamp,
+    key_str, value_str.
+    """
+    return build_rows(spark, spec, stream=False).orderBy(*EMIT_ORDER)
+

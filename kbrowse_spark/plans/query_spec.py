@@ -13,7 +13,7 @@ Validation parity (cli.clj:58-66):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 
 class QuerySpecError(ValueError):
@@ -99,67 +99,39 @@ class QuerySpec:
     @classmethod
     def from_options(cls, opts: dict) -> "QuerySpec":
         """Build from a flat string-keyed options map (HTTP query args /
-        CLI long opts with dashes or underscores)."""
-        norm = {k.replace("-", "_"): v for k, v in opts.items()}
-
-        def as_bool(v):
-            return str(v).lower() in ("1", "true", "yes", "on", "")
-
-        def as_int(v, name):
-            try:
-                return int(v)
-            except (TypeError, ValueError):
-                raise QuerySpecError(f"--{name} must be an integer, got {v!r}")
-
+        CLI long opts with dashes or underscores).  Each value is parsed
+        by its field's type; unknown keys are ignored, and an empty int
+        value leaves the field unset."""
         spec = cls()
-        if "bootstrap_servers" in norm:
-            spec.bootstrap_servers = norm["bootstrap_servers"]
-        if "source_parquet" in norm:
-            spec.source_parquet = norm["source_parquet"]
-        if "topics" in norm:
-            spec.topics = [t for t in str(norm["topics"]).split(",") if t]
-        if "partitions" in norm and norm["partitions"] not in (None, ""):
-            spec.partitions = [
-                as_int(p, "partitions") for p in str(norm["partitions"]).split(",")
-            ]
-        if "default_partition" in norm:
-            spec.default_partition = as_bool(norm["default_partition"])
-        if "key_regex" in norm:
-            spec.key_regex = norm["key_regex"]
-        if "value_regex" in norm:
-            spec.value_regex = norm["value_regex"]
-        if "key_deserializer" in norm:
-            spec.key_deserializer = norm["key_deserializer"]
-        if "value_deserializer" in norm:
-            spec.value_deserializer = norm["value_deserializer"]
-        if "num_partitions" in norm and norm["num_partitions"] not in (None, ""):
-            spec.num_partitions = as_int(norm["num_partitions"], "num-partitions")
-        if "avro_key_schema" in norm:
-            spec.avro_key_schema = norm["avro_key_schema"]
-        if "avro_value_schema" in norm:
-            spec.avro_value_schema = norm["avro_value_schema"]
-        if "schema_registry_url" in norm:
-            spec.schema_registry_url = norm["schema_registry_url"]
-        if "relative_offset" in norm and norm["relative_offset"] not in (None, ""):
-            spec.relative_offset = as_int(norm["relative_offset"], "relative-offset")
-        if "start_timestamp" in norm:
-            spec.start_timestamp = norm["start_timestamp"]
-        if "stop_timestamp" in norm:
-            spec.stop_timestamp = norm["stop_timestamp"]
-        if "follow" in norm:
-            spec.follow = as_bool(norm["follow"])
-        if "print_offset" in norm and norm["print_offset"] not in (None, ""):
-            spec.print_offset = as_int(norm["print_offset"], "print-offset")
-        if "min_partitions" in norm and norm["min_partitions"] not in (None, ""):
-            spec.min_partitions = as_int(norm["min_partitions"], "min-partitions")
-        if "max_offsets_per_trigger" in norm and norm[
-            "max_offsets_per_trigger"
-        ] not in (None, ""):
-            spec.max_offsets_per_trigger = as_int(
-                norm["max_offsets_per_trigger"], "max-offsets-per-trigger"
-            )
-        if "stop_after_seconds" in norm:
-            spec.stop_after_seconds = as_int(
-                norm["stop_after_seconds"], "stop-after-seconds"
-            )
+        for key, v in opts.items():
+            name = key.replace("-", "_")
+            kind = _FIELD_TYPES.get(name)
+            if kind is None or v is None:
+                continue
+            flag = "--" + name.replace("_", "-")
+            if kind == "bool":
+                v = str(v).lower() in ("1", "true", "yes", "on", "")
+            elif kind == "list[str]":
+                v = [t for t in str(v).split(",") if t]
+            elif kind == "list[int] | None":
+                if v == "":
+                    continue
+                v = [_as_int(p, flag) for p in str(v).split(",")]
+            elif kind == "int | None":
+                if v == "":
+                    continue
+                v = _as_int(v, flag)
+            setattr(spec, name, v)
         return spec.validate()
+
+
+def _as_int(v, flag: str) -> int:
+    try:
+        return int(v)
+    except (TypeError, ValueError):
+        raise QuerySpecError(f"{flag} must be an integer, got {v!r}")
+
+
+# Field name -> annotation text (annotations are strings under
+# ``from __future__ import annotations``), the parser's dispatch key.
+_FIELD_TYPES = {f.name: f.type for f in fields(QuerySpec)}

@@ -25,6 +25,7 @@ import time
 
 from kbrowse_spark.config import EngineConfig
 from kbrowse_spark.plans.query_spec import QuerySpec, QuerySpecError
+from kbrowse_spark.sinks import pioneer
 
 
 class ResponseCache:
@@ -174,59 +175,9 @@ def create_app(spark=None, config: EngineConfig | None = None):
             )
 
         if spec.follow:
-            # Follow mode over HTTP: an unbounded streaming query writes
-            # protocol chunks into a queue drained by the chunked
-            # response (the Spark analogue of the reference's
-            # piped-input-stream).  If the client stops reading, the
-            # writer times out and the watchdog stops the query — no
-            # immortal thread.
-            import json as _json
-            import queue
-
-            from kbrowse_spark.streaming.follow import run_follow
-
-            chunks: queue.Queue = queue.Queue(maxsize=1000)
-
-            class _QueueWriter:
-                def write(self, s: str) -> None:
-                    chunks.put(s, timeout=300)
-
-                def flush(self) -> None:
-                    pass
-
-            def _put_final(item) -> None:
-                # Blocking with a generous timeout: a slow-but-alive
-                # client must still receive the terminator; only a
-                # fully-stuck consumer drops it.
-                try:
-                    chunks.put(item, timeout=600)
-                except queue.Full:
-                    pass
-
-            def run() -> None:
-                try:
-                    run_follow(get_session(), spec, _QueueWriter(), bounded=False)
-                except Exception as e:  # surface errors on the wire
-                    # Keep the streamed array parseable: the error is
-                    # one more row, then the closing bracket (run_follow
-                    # never wrote ']' on the failure path).
-                    _put_final(", " + _json.dumps({"error": str(e)}) + "]")
-                finally:
-                    _put_final(None)
-
-            threading.Thread(target=run, daemon=True).start()
-
-            def generate_follow():
-                while True:
-                    chunk = chunks.get()
-                    if chunk is None:
-                        return
-                    yield chunk
-
-            return Response(generate_follow(), mimetype="application/json")
+            return _follow_response(get_session(), spec)
 
         from kbrowse_spark.plans.planner import build_scan
-        from kbrowse_spark.sinks.pioneer import emit_json_array
 
         try:
             df = build_scan(get_session(), spec)
@@ -238,9 +189,6 @@ def create_app(spark=None, config: EngineConfig | None = None):
             # reference applies stop-running-date to every search,
             # search.clj:117-121): cancel this query's job group after
             # the deadline so a huge /search can't pin the cluster.
-            import json as _json
-            import time
-
             sc = df.sparkSession.sparkContext
             group = f"search-{time.monotonic_ns()}"
             sc.setJobGroup(group, "bounded /search", True)
@@ -251,12 +199,12 @@ def create_app(spark=None, config: EngineConfig | None = None):
             timer.start()
             buf: list[str] = []
             try:
-                for chunk in emit_json_array(df, pretty=False):
+                for chunk in pioneer.emit_json_array(df, pretty=False):
                     buf.append(chunk)
                     yield chunk  # chunked transfer: client reads while we scan
             except Exception as e:  # cancelled (or failed) mid-stream:
                 # close the array on the wire, never cache the partial.
-                yield ", " + _json.dumps({"error": str(e)}) + "]"
+                yield pioneer.error_close(e)
                 return
             finally:
                 timer.cancel()
@@ -265,6 +213,68 @@ def create_app(spark=None, config: EngineConfig | None = None):
         return Response(generate(), mimetype="application/json")
 
     return app
+
+
+def _follow_response(spark, spec: QuerySpec):
+    """Follow mode over HTTP: an unbounded streaming query writes
+    protocol chunks into a queue drained by the chunked response (the
+    Spark analogue of the reference's piped-input-stream).  If the
+    client stops reading, the writer times out and the watchdog stops
+    the query — no immortal thread.
+
+    The response starts only once run_follow has written its first
+    chunk, i.e. once the plan is built, so a plan-time error keeps the
+    batch error contract (Q8: 400 with ``{"error": msg}``)."""
+    import queue
+
+    from flask import Response
+
+    from kbrowse_spark.streaming.follow import run_follow
+
+    chunks: queue.Queue = queue.Queue(maxsize=1000)
+
+    class _QueueWriter:
+        def write(self, s: str) -> None:
+            chunks.put(s, timeout=300)
+
+        def flush(self) -> None:
+            pass
+
+    def _put_final(item) -> None:
+        # Blocking with a generous timeout: a slow-but-alive client
+        # must still receive the terminator; only a fully-stuck
+        # consumer drops it.
+        try:
+            chunks.put(item, timeout=600)
+        except queue.Full:
+            pass
+
+    def run() -> None:
+        try:
+            run_follow(spark, spec, _QueueWriter(), bounded=False)
+        except Exception as e:  # noqa: BLE001 - handed to the reader
+            _put_final(e)
+        finally:
+            _put_final(None)
+
+    threading.Thread(target=run, daemon=True).start()
+    first = chunks.get()
+    if isinstance(first, QuerySpecError):
+        return {"error": str(first)}, 400
+    if isinstance(first, Exception):
+        raise first
+
+    def generate():
+        chunk = first
+        while chunk is not None:
+            if isinstance(chunk, Exception):
+                # run_follow never wrote ']' on the failure path.
+                yield pioneer.error_close(chunk)
+            else:
+                yield chunk
+            chunk = chunks.get()
+
+    return Response(generate(), mimetype="application/json")
 
 
 def main() -> None:  # pragma: no cover - manual entry

@@ -7,9 +7,12 @@ Protocol (`src/kbrowse/search.clj:25-32,159-160,201`):
 Result rows carry epoch-millis timestamps and best-effort JSON-parsed
 key/value (O14/O15); progress rows carry a rendered date string (Q5).
 
-Rows are streamed through ``toLocalIterator`` — one partition's results
-in memory at a time, never a full collect; the HTTP layer flushes per
-chunk exactly like the reference's piped output stream.
+This module is the only place the framing is spelled: the batch scan
+(``emit_json_array``), follow mode and the HTTP service all frame
+through it.  Rows are streamed through ``toLocalIterator`` — one
+partition's results in memory at a time, never a full collect; the
+HTTP layer flushes per chunk exactly like the reference's piped output
+stream.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import DataFrame
 from kbrowse_spark.functions.decoders import try_parse_json
 
 PIONEER = {"type": "pioneer"}
+CLOSE = "]"
 
 
 def render_row(row) -> dict:
@@ -61,17 +65,32 @@ def render_row(row) -> dict:
     }
 
 
+def _dump(obj, pretty: bool = False) -> str:
+    return json.dumps(obj, indent=2 if pretty else None, ensure_ascii=False)
+
+
+def open_chunks(pretty: bool = False) -> tuple[str, str]:
+    """The array's first two chunks: '[' and the pioneer row."""
+    return "[", _dump(PIONEER, pretty)
+
+
+def row_chunk(obj, pretty: bool = False) -> str:
+    """One rendered row, as the array's next element."""
+    return ", " + _dump(obj, pretty)
+
+
+def error_close(e: BaseException) -> str:
+    """Close the array after a mid-stream failure: the error is one more
+    row, then ']', so the streamed body still parses."""
+    return row_chunk({"error": str(e)}) + CLOSE
+
+
 def emit_json_array(df: DataFrame, pretty: bool = True) -> Iterator[str]:
     """Yield protocol chunks: '[', pioneer, ', '+row ..., ']'."""
-
-    def dump(obj) -> str:
-        return json.dumps(obj, indent=2 if pretty else None, ensure_ascii=False)
-
-    yield "["
-    yield dump(PIONEER)
+    yield from open_chunks(pretty)
     for row in df.toLocalIterator():
-        yield ", " + dump(render_row(row))
-    yield "]"
+        yield row_chunk(render_row(row), pretty)
+    yield CLOSE
 
 
 def collect_protocol(df: DataFrame, pretty: bool = False) -> str:

@@ -117,66 +117,36 @@ def ending_offsets_json(
     )
 
 
-def offsets_by_timestamp_json(
-    assignment: dict[str, list[int]], timestamp_ms: int
-) -> str:
-    """`startingOffsetsByTimestamp` / `endingOffsetsByTimestamp` JSON:
-    every assigned partition bound at one epoch-millis instant.  The
-    reference's start-timestamp option (validated but unused there —
-    SURVEY O9) and stop-timestamp both compile to this; a residual
-    `timestamp <= bound` filter preserves exactness since the Kafka
-    offset-for-time lookup is batch-granular."""
-    return json.dumps(
-        {t: {str(p): timestamp_ms for p in ps} for t, ps in sorted(assignment.items())}
-    )
-
-
-def kafka_batch_options(
+def kafka_options(
     bootstrap_servers: str,
     assignment: dict[str, list[int]],
     starting_offsets: str,
-    ending_offsets: str = "latest",
+    ending_offsets: str | None = None,
+    max_offsets_per_trigger: int | None = None,
     min_partitions: int | None = None,
 ) -> dict[str, str]:
-    """Options for ``spark.read.format("kafka")``.  One Spark task per
-    topic-partition by default; ``minPartitions`` splits hot partitions
-    into offset sub-ranges for extra parallelism at scale."""
+    """Options for ``spark.read.format("kafka")`` (set ``ending_offsets``)
+    or follow mode's ``readStream`` (no ending bound).
+
+    ``maxOffsetsPerTrigger`` bounds each micro-batch's total record
+    count (back-pressure on a hot topic: without it the first batch
+    after a restart tries to swallow the whole backlog).  One Spark task
+    per topic-partition by default; ``minPartitions`` splits hot
+    partitions into offset sub-ranges for extra parallelism at scale.
+    Unset knobs are absent, so Spark's defaults apply."""
     opts = {
         "kafka.bootstrap.servers": bootstrap_servers,
         "assign": assign_json(assignment),
         "startingOffsets": starting_offsets,
-        "endingOffsets": ending_offsets,
         # kbrowse parity: no consumer group semantics, autocommit off
         # (kafka.clj:40-49) — the Spark source already never commits.
         "failOnDataLoss": "false",
     }
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
-    return opts
-
-
-def kafka_stream_options(
-    bootstrap_servers: str,
-    assignment: dict[str, list[int]],
-    starting_offsets: str,
-    max_offsets_per_trigger: int | None = None,
-    min_partitions: int | None = None,
-) -> dict[str, str]:
-    """Options for follow mode (``readStream``) — no ending bound.
-
-    ``maxOffsetsPerTrigger`` bounds each micro-batch's total record
-    count (back-pressure on a hot topic: without it the first batch
-    after a restart tries to swallow the whole backlog);
-    ``minPartitions`` splits hot topic-partitions into offset
-    sub-ranges so one 100 TB partition doesn't pin one task."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "assign": assign_json(assignment),
-        "startingOffsets": starting_offsets,
-        "failOnDataLoss": "false",
-    }
-    if max_offsets_per_trigger:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    if min_partitions:
-        opts["minPartitions"] = str(min_partitions)
+    for name, value in (
+        ("endingOffsets", ending_offsets),
+        ("maxOffsetsPerTrigger", max_offsets_per_trigger),
+        ("minPartitions", min_partitions),
+    ):
+        if value:
+            opts[name] = str(value)
     return opts

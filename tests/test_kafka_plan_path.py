@@ -24,7 +24,7 @@ import json
 
 from kbrowse_spark.sources.kafka import (
     ending_offsets_json,
-    kafka_batch_options,
+    kafka_options,
     resolve_partitions,
     starting_offsets_json,
 )
@@ -61,7 +61,7 @@ def _planned_options() -> dict[str, str]:
     )
     earliest = {(t, p): 5 for t, ps in assignment.items() for p in ps}
     latest = {(t, p): 500 for t, ps in assignment.items() for p in ps}
-    return kafka_batch_options(
+    return kafka_options(
         "broker-1:9092,broker-2:9092",
         assignment,
         starting_offsets=starting_offsets_json(

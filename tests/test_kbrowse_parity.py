@@ -239,7 +239,7 @@ def test_option_math_pure():
     from kbrowse_spark.sources.kafka import (
         assign_json,
         ending_offsets_json,
-        kafka_batch_options,
+        kafka_options,
         resolve_partitions,
         starting_offsets_json,
     )
@@ -261,7 +261,7 @@ def test_option_math_pure():
     s2 = json.loads(starting_offsets_json({"a": [0]}, earliest, latest, 200))
     assert s2 == {"a": {"0": 100}}  # clamped at latest (Q9)
     assert ending_offsets_json({"a": [0]}) == "latest"
-    opts = kafka_batch_options("h:9092", asg, "earliest")
+    opts = kafka_options("h:9092", asg, "earliest", ending_offsets="latest")
     assert json.loads(opts["assign"]) == {"a": [0, 1, 2], "b": [0, 1]}
 
 
@@ -269,22 +269,22 @@ def test_hot_topic_scale_knobs():
     """minPartitions (batch + stream) and maxOffsetsPerTrigger (stream)
     — the two knobs a hot 100 TB topic needs — flow from QuerySpec into
     the source options."""
-    from kbrowse_spark.sources.kafka import (
-        kafka_batch_options,
-        kafka_stream_options,
-    )
+    from kbrowse_spark.sources.kafka import kafka_options
 
     asg = {"a": [0, 1]}
-    opts = kafka_batch_options("h:9092", asg, "earliest", min_partitions=64)
+    opts = kafka_options(
+        "h:9092", asg, "earliest", ending_offsets="latest", min_partitions=64
+    )
     assert opts["minPartitions"] == "64"
     assert "maxOffsetsPerTrigger" not in opts  # batch has no trigger
-    sopts = kafka_stream_options(
+    sopts = kafka_options(
         "h:9092", asg, "earliest", max_offsets_per_trigger=100000, min_partitions=64
     )
     assert sopts["maxOffsetsPerTrigger"] == "100000"
     assert sopts["minPartitions"] == "64"
+    assert "endingOffsets" not in sopts  # follow has no stop bound
     # unset -> absent (Spark defaults apply)
-    sopts2 = kafka_stream_options("h:9092", asg, "earliest")
+    sopts2 = kafka_options("h:9092", asg, "earliest")
     assert "maxOffsetsPerTrigger" not in sopts2 and "minPartitions" not in sopts2
     # QuerySpec parsing + validation
     spec = QuerySpec.from_options(
@@ -430,14 +430,6 @@ def test_multi_topic_per_topic_partitions(spark, tmp_path):
     assert {r["value"] for r in rows2[1:]} == {"x2"}
 
 
-def test_offsets_by_timestamp_json():
-    from kbrowse_spark.sources.kafka import offsets_by_timestamp_json
-
-    s = json.loads(offsets_by_timestamp_json({"a": [0, 1], "b": [0]}, 1700000000000))
-    assert s == {"a": {"0": 1700000000000, "1": 1700000000000},
-                 "b": {"0": 1700000000000}}
-
-
 def test_num_partitions_hint_fixes_inference(spark, tmp_path):
     """Data-only inference of the partition count (max+1) breaks
     default-partition pruning when high partitions are empty; the
@@ -476,14 +468,12 @@ def test_num_partitions_hint_fixes_inference(spark, tmp_path):
 
 
 def test_scan_order_modes(spark, topic_a_path):
-    """deterministic_order=True totally orders (global sort);
-    False sorts within partitions only — the scale path has no
-    cluster-wide exchange for emission ordering."""
+    """build_scan totally orders its output with one global sort (the
+    oracle-hash / CLI / service emission order)."""
     spec = QuerySpec(
         source_parquet=topic_a_path, topics=["topic-a"], key_regex=".*"
     ).validate()
     det = build_scan(spark, spec)
-    fast = build_scan(spark, spec, deterministic_order=False)
     def sort_flags(df) -> list[bool]:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         # logical Sort prints "Sort [cols...], <global>" per line
@@ -494,6 +484,3 @@ def test_scan_order_modes(spark, topic_a_path):
         ]
 
     assert sort_flags(det) == [True]  # one global sort
-    assert sort_flags(fast) == [False]  # within-partition only
-    # both modes emit identical row SETS
-    assert sorted(map(tuple, det.collect())) == sorted(map(tuple, fast.collect()))

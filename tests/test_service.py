@@ -58,6 +58,28 @@ def test_search_bad_args_400(client):
     assert "error" in r.get_json()
 
 
+def test_search_follow_plan_error_400(client):
+    # Q8 holds for follow too: a spec that fails at plan time is a 400,
+    # not a 200 whose streamed body does not parse.
+    r = client.get(
+        f"/search?source-parquet={client.fixture_path}&topics=topic-a"
+        "&key-regex=k.*&follow=true&partitions=99"
+    )
+    assert r.status_code == 400
+    assert "partitions out of range" in r.get_json()["error"]
+
+
+def test_search_follow_streams_golden_rows(client):
+    r = client.get(
+        f"/search?source-parquet={client.fixture_path}&topics=topic-a"
+        "&key-regex=k.*&follow=true&stop-after-seconds=3"
+    )
+    assert r.status_code == 200
+    rows = json.loads(r.get_data(as_text=True))
+    assert rows[0] == {"type": "pioneer"}
+    assert [x["value"] for x in rows[1:]] == ["v0", "v1", "v2"]
+
+
 def test_search_cached_roundtrip(client):
     qs = f"source-parquet={client.fixture_path}&topics=topic-a&key-regex=k2"
     missed = client.get(f"/cached?{qs}")

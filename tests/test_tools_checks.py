@@ -188,3 +188,36 @@ def test_hof_hotpath_checker_flags_the_r12_pq_shape():
         [sys.executable, tool], capture_output=True, text=True
     )
     assert res.returncode == 0, res.stdout + res.stderr
+
+
+def test_hof_allowlist_survives_line_moves():
+    """The HOF-audit allowlist is keyed by enclosing def plus a hash of
+    the expression, not file:line: blank lines inserted above the
+    allowed expression keep it allowed, while a new >=3-deep nest in
+    the same def — or an edit to the allowed one — still flags."""
+    from audit_hof_hotpath import ALLOW, audit_source
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mod = "kbrowse_spark/operators/analytics.py"
+    with open(os.path.join(root, mod)) as f:
+        src = f.read()
+    before = audit_source(src, mod)
+    assert before and all(key in ALLOW for *_, key in before)
+
+    shifted = audit_source("\n" * 41 + src, mod)
+    assert [f[1] for f in shifted] == [f[1] + 41 for f in before]
+    assert [f[3] for f in shifted] == [f[3] for f in before]
+
+    new_nest = textwrap.dedent(
+        '''
+        def seq_pattern_triples(spark, sf_dir):
+            return df.select(F.expr(
+                "transform(s, a -> transform(s, b -> transform(s, c -> a + b + c)))"
+            ))
+        '''
+    )
+    found = audit_source(new_nest, mod)
+    assert found and found[0][3] not in ALLOW
+    edited = src.replace("c -> concat(a, '>', b, '>', c)", "c -> concat(a, '|', b, '|', c)")
+    assert edited != src
+    assert any(key not in ALLOW for *_, key in audit_source(edited, mod))

@@ -26,13 +26,17 @@ is the accepted budget; its per-row cost is bounded by the array
 length, which in this codebase is <= 64.
 
 Allow-listed findings carry a stated bound, same contract as
-audit_plan_smells.ALLOW.  Exit 1 on any un-allowlisted flag.
+audit_plan_smells.ALLOW; they are keyed by enclosing def plus a hash
+of the expression text, so moving code does not stale the list while
+any edit to an allowed expression re-flags it.  Exit 1 on any
+un-allowlisted flag.
 """
 
 from __future__ import annotations
 
 import ast
 import glob
+import hashlib
 import os
 import re
 import sys
@@ -45,16 +49,24 @@ HOF = re.compile(
 # per row.
 _EXPR_FUNCS = {"expr", "selectExpr"}
 
+# Keyed by finding_key().
 ALLOW: dict[str, str] = {
     # Bounded by construction: the triple enumeration runs over a
     # <= _SEQ_WIN(=10)-element per-user window, so the 3-deep nest is
     # C(10,3) <= 120 inner ops per user row (docstring states the
     # bound; benched at ~0.5 s in the headline set).
-    "kbrowse_spark/operators/analytics.py:2675": (
+    "kbrowse_spark/operators/analytics.py::seq_pattern_triples#776dfada3d41": (
         "3-deep transform over a <=10-element window: C(10,3) <= 120"
         " ops/row (seq_pattern_triples, bound stated in docstring)"
     ),
 }
+
+
+def finding_key(modname: str, func: str, text: str) -> str:
+    """Line-stable allowlist key: module, enclosing def, expression hash
+    (whitespace-normalized, so re-wrapping a string does not move it)."""
+    digest = hashlib.sha1(" ".join(text.split()).encode()).hexdigest()[:12]
+    return f"{modname}::{func}#{digest}"
 
 
 def hof_depth(text: str) -> int:
@@ -96,8 +108,19 @@ def _string_parts(node: ast.AST) -> str:
     return ""
 
 
+def _owners(tree: ast.AST) -> dict[ast.AST, str]:
+    """node -> name of its innermost enclosing def (ast.walk is
+    breadth-first, so inner defs overwrite their outer def's claim)."""
+    owner: dict[ast.AST, str] = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                owner[node] = fn.name
+    return owner
+
+
 def _expr_strings(tree: ast.AST):
-    """(lineno, text) for every string flowing into an expr call site,
+    """(node, text) for every string flowing into an expr call site,
     plus every module-level assignment whose value is a string that
     CONTAINS a HOF (those constants are routinely interpolated into
     expr strings elsewhere)."""
@@ -112,30 +135,33 @@ def _expr_strings(tree: ast.AST):
                 for arg in node.args:
                     s = _string_parts(arg)
                     if s:
-                        yield node.lineno, s
+                        yield node, s
         elif isinstance(node, ast.Assign):
             s = _string_parts(node.value)
             if s and HOF.search(s):
-                yield node.lineno, s
+                yield node, s
         elif isinstance(node, ast.Return):
             s = _string_parts(node.value) if node.value else ""
             if s and HOF.search(s):
-                yield node.lineno, s
+                yield node, s
 
 
-def audit_source(src: str, modname: str) -> list[tuple[str, int, int]]:
-    """[(module, lineno, depth)] findings with depth >= 3."""
+def audit_source(src: str, modname: str) -> list[tuple[str, int, int, str]]:
+    """[(module, lineno, depth, finding_key)] findings with depth >= 3."""
+    tree = ast.parse(src)
+    owner = _owners(tree)
     out = []
-    for lineno, text in _expr_strings(ast.parse(src)):
+    for node, text in _expr_strings(tree):
         d = hof_depth(text)
         if d >= 3:
-            out.append((modname, lineno, d))
+            func = owner.get(node, "<module>")
+            out.append((modname, node.lineno, d, finding_key(modname, func, text)))
     return out
 
 
 def main() -> int:
     root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-    findings: list[tuple[str, int, int]] = []
+    findings: list[tuple[str, int, int, str]] = []
     n_files = 0
     for path in sorted(
         glob.glob(os.path.join(root, "kbrowse_spark", "**", "*.py"),
@@ -146,15 +172,14 @@ def main() -> int:
         with open(path) as f:
             findings += audit_source(f.read(), mod)
     bad = 0
-    for mod, lineno, depth in findings:
-        key = f"{mod}:{lineno}"
+    for mod, lineno, depth, key in findings:
         if key in ALLOW:
-            print(f"ALLOWED {key} HOF depth {depth}: {ALLOW[key]}")
+            print(f"ALLOWED {mod}:{lineno} HOF depth {depth}: {ALLOW[key]}")
         else:
             bad += 1
             print(
-                f"FLAG {key}: SQL expression nests {depth} higher-order"
-                f" functions — Spark evaluates HOFs interpreted (no"
+                f"FLAG {mod}:{lineno} ({key}): SQL expression nests {depth}"
+                f" higher-order functions — Spark evaluates HOFs interpreted (no"
                 f" codegen), so a >=3-deep chain is a per-row"
                 f" interpreted loop nest (the r12 PQ distance-table"
                 f" defect, ~20 ms/row).  Move the math to an"
